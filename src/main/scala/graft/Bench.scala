@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Per-round benchmark main: times the OSM import phases and
@@ -61,6 +61,12 @@ object Bench {
   private def fmt(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
+  private def med(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    if (s.size % 2 == 1) s(s.size / 2)
+    else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
+  }
+
   /** Storage level for the generalization-SOURCE table caches (the
     * materialized-untimed copies the gen phase reads after the import's
     * stage caches are dropped). r12 made these DISK_ONLY along with the
@@ -99,8 +105,8 @@ object Bench {
     * stays over budget for as long as they hold it. The threshold is the
     * SAME 12.5% budget the in-rep meter flags on
     * (SPARK_GRAFT_FOREIGN_CPU_MAX), so admission and contention-flagging
-    * agree by construction. Legacy disable knob honored:
-    * SPARK_GRAFT_LOAD_GATE=0 skips the wait entirely.
+    * agree by construction; SPARK_GRAFT_FOREIGN_CPU_MAX<=0 skips the
+    * wait entirely.
     * Returns (1-min loadavg at admission — recorded for the artifact,
     * not gated on — , waitedSec, gateTimedOut). */
   private def admitRep(): (Double, Double, Boolean) = {
@@ -108,8 +114,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_FOREIGN_CPU_MAX", "0.125").toDouble
     val capSec =
       sys.env.getOrElse("SPARK_GRAFT_LOAD_GATE_WAIT", "120").toDouble
-    val disabled =
-      sys.env.get("SPARK_GRAFT_LOAD_GATE").contains("0") || maxForeign <= 0
+    val disabled = maxForeign <= 0
     // flush dirty writeback before sampling: the r11 loadavg gate's 30-60s
     // wait was an ACCIDENTAL settle for the previous section's page-cache
     // aftermath; this gate admits in ~3s, so make the settle explicit or
@@ -344,11 +349,7 @@ object Bench {
       * outgrows the cap, per-key entries drop from the end (flagged
       * "omitted":N) before the envelope ever truncates mid-JSON. */
     def emitRecord(queryResults: Seq[(String, Double)]): Unit = {
-      // derived *_net keys (bucketed − bucketize) are DETAIL, not measured
-      // phases: summing them would count the bucketed import twice and
-      // break round-over-round comparison of `value` (r10 advice)
-      val total = osmAcc.filterNot(_._1.endsWith("_net")).map(_._2).sum +
-        queryResults.map(_._2).sum
+      val total = osmAcc.map(_._2).sum + queryResults.map(_._2).sum
       val repsField = osmReps.map(r => s""","osm_reps":$r""").getOrElse("") +
         xlMetrics.map(m => s""","osm_xl":$m""").getOrElse("") +
         soakMetrics.map(m => s""","osm_soak":$m""").getOrElse("") +
@@ -522,11 +523,6 @@ object Bench {
         // median beside min (r8 judge ask): min says what the plan can do,
         // median says what the box delivered — a wide min↔median gap marks
         // the record as contention-dominated without a human re-run
-        def med(xs: Seq[Double]): Double = {
-          val s = xs.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-        }
         val mParse = med(phaseRuns.map(_.parse))
         val mImport = med(phaseRuns.map(_.imp))
         val mGen = med(phaseRuns.map(_.gen))
@@ -542,75 +538,6 @@ object Bench {
             s"clean reps ${cleanRuns.size}/${phaseRuns.size}")
         System.err.println(s"[bench] stats ${stats.report()}")
         graft.operators.ImportStats.detach(spark, stats)
-
-        // -- bucketed-element-store A/B (SURVEY §13 candidate): the same
-        // import with J1's ref→coord lookup joining a PRE-BUCKETED store
-        // (WayAssembly.resolveStored) instead of the in-pipeline AQE
-        // shuffle. The store write (both sides bucketed+sorted by id) is
-        // timed inside the import but also reported separately — it is the
-        // paid-once cost the layout amortizes over repeated reads (diff
-        // reruns), exactly the reference's ID-sorted cache trade
-        // (cache/delta.go:12-35).
-        val bucketed =
-          if (sys.env.get("SPARK_GRAFT_BENCH_BUCKETED").contains("0")) Seq.empty
-          else try {
-            // rep 1 writes the store inside its timed import (the paid-once
-            // cost, reported separately as osm_bucketize); reps ≥ 2 REUSE
-            // it — the repeated-read path diff reruns and `import
-            // -store-reuse` amortize against, reported as its own entry
-            val bReps = math.min(3, reps)
-            val runsB = (1 to bReps).map { rep =>
-              val bundle = graft.operators.ImportStats.instrument(
-                graft.sources.OsmPbf.read(spark, synthDir,
-                  Some(graft.sources.TagFilters(mapping))))
-              // parse untimed here (same phase as above; priming the
-              // element caches keeps the import number comparable)
-              bundle.coords.count(); bundle.ways.count(); bundle.relations.count()
-              var tBucketize = 0.0
-              val storedAssembler: (DataFrame, DataFrame) => DataFrame =
-                (ways, coords) => {
-                  if (rep == 1) {
-                    val tb = System.nanoTime()
-                    val exploded = ways.select(col("id").as("way_id"),
-                      size(col("refs")).as("nrefs"),
-                      posexplode(col("refs")).as(Seq("pos", "id")))
-                    graft.operators.Bucketing.writeBucketed(
-                      exploded, "graft_bench_wayrefs", "id", nBuckets = cpus.toInt)
-                    graft.operators.Bucketing.writeBucketed(
-                      coords, "graft_bench_coords", "id", nBuckets = cpus.toInt)
-                    tBucketize = (System.nanoTime() - tb) / 1e9
-                  }
-                  graft.operators.WayAssembly.resolveStored(
-                    spark.table("graft_bench_wayrefs"),
-                    spark.table("graft_bench_coords"))
-                }
-              val t1 = System.nanoTime()
-              val pipeline = new ImportPipeline(spark, mapping,
-                assembler = storedAssembler)
-              val tables = pipeline.run(bundle)
-              sinkAll(pipeline, tables, eagerStages = true)
-              val tImportB = (System.nanoTime() - t1) / 1e9
-              pipeline.unpersistAll()
-              resetCaches()
-              System.err.println(
-                f"[bench] osm_scale_bucketed rep $rep/$bReps " +
-                  f"import=$tImportB%.1fs (bucketize=$tBucketize%.1fs inside)")
-              (tImportB, tBucketize)
-            }
-            // _net = bucketed − bucketize: the assembly cost with the
-            // paid-once store write subtracted, directly comparable to the
-            // plain import across rounds without arithmetic (r9 verdict)
-            Seq(s"osm_import_synth${copies}_bucketed" -> runsB.head._1,
-              s"osm_bucketize_synth$copies" -> runsB.head._2,
-              s"osm_import_synth${copies}_bucketed_net" ->
-                (runsB.head._1 - runsB.head._2)) ++
-              (if (runsB.size > 1)
-                Seq(s"osm_import_synth${copies}_stored" -> runsB.tail.map(_._1).min)
-              else Seq.empty)
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] osm_import_bucketed failed: ${e.getMessage}")
-            Seq.empty
-          }
 
         def repArr(f: RepRun => Double) =
           phaseRuns.map(r => fmt(f(r))).mkString("[", ",", "]")
@@ -634,7 +561,7 @@ object Bench {
             cleanBlock + "}")
         Seq(s"osm_parse_synth$copies" -> tParse,
           s"osm_import_synth$copies" -> tImport,
-          s"osm_generalize_synth$copies" -> tGen) ++ bucketed
+          s"osm_generalize_synth$copies" -> tGen)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] osm_import_synth failed: ${e.getMessage}")
         Seq.empty
@@ -814,11 +741,6 @@ object Bench {
               f"load=${loadavg()}%.2f")
           dt
         }
-        def med(xs: Seq[Double]): Double = {
-          val s = xs.sorted
-          if (s.size % 2 == 1) s(s.size / 2)
-          else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-        }
         val first10 = med(times.take(10))
         val last10 = med(times.takeRight(10))
         // store file census after the final vacuum: O(buckets) is the claim
@@ -885,7 +807,7 @@ object Bench {
         // the rep with the best import.
         val gb = 1024.0 * 1024 * 1024
         // clamped ≥1: zero reps would throw at minBy and silently drop the
-        // whole section (including the bucketed sub-results) to the catch
+        // whole section to the catch
         val xlReps =
           math.max(1, sys.env.getOrElse("SPARK_GRAFT_XL_REPS", "2").toInt)
         final case class XlRun(parsed: Long, parse: Double, imp: Double,
@@ -973,52 +895,6 @@ object Bench {
         val tParse = xlRuns.map(_.parse).min
         val tImport = best.imp
         val tGen = xlRuns.map(_.gen).min
-        // stored-assembly variant at the same scale: write the bucketed
-        // element store (timed separately — the paid-once layout cost),
-        // then one import off it (the diff-rerun read path at 10×)
-        val xlStored =
-          if (sys.env.get("SPARK_GRAFT_BENCH_BUCKETED").contains("0")) Seq.empty
-          else try {
-            val bundle2 = graft.operators.ImportStats.instrument(
-              graft.sources.OsmPbf.read(spark, xlDir,
-                Some(graft.sources.TagFilters(mapping)),
-                storage = org.apache.spark.storage.StorageLevel.DISK_ONLY))
-            bundle2.coords.count(); bundle2.ways.count(); bundle2.relations.count()
-            var tBucketize = 0.0
-            val storedAssembler: (DataFrame, DataFrame) => DataFrame =
-              (ways, coords) => {
-                val tb = System.nanoTime()
-                val exploded = ways.select(col("id").as("way_id"),
-                  size(col("refs")).as("nrefs"),
-                  posexplode(col("refs")).as(Seq("pos", "id")))
-                graft.operators.Bucketing.writeBucketed(
-                  exploded, "graft_bench_xl_wayrefs", "id", nBuckets = cpus.toInt)
-                graft.operators.Bucketing.writeBucketed(
-                  coords, "graft_bench_xl_coords", "id", nBuckets = cpus.toInt)
-                tBucketize = (System.nanoTime() - tb) / 1e9
-                graft.operators.WayAssembly.resolveStored(
-                  spark.table("graft_bench_xl_wayrefs"),
-                  spark.table("graft_bench_xl_coords"))
-              }
-            val tb0 = System.nanoTime()
-            val pipelineB = new ImportPipeline(spark, mapping,
-              assembler = storedAssembler)
-            sinkAll(pipelineB, pipelineB.run(bundle2), eagerStages = true)
-            val tImportB = (System.nanoTime() - tb0) / 1e9
-            pipelineB.unpersistAll()
-            resetCaches()
-            System.err.println(
-              f"[bench] osm_scale_xl_bucketed import=$tImportB%.1fs " +
-                f"(bucketize=$tBucketize%.1fs inside, " +
-                f"net=${tImportB - tBucketize}%.1fs)")
-            Seq(s"osm_import_xl${xlCopies}_bucketed" -> tImportB,
-              s"osm_bucketize_xl$xlCopies" -> tBucketize,
-              s"osm_import_xl${xlCopies}_bucketed_net" ->
-                (tImportB - tBucketize))
-          } catch { case e: Throwable =>
-            System.err.println(s"[bench] osm_scale_xl_bucketed failed: ${e.getMessage}")
-            Seq.empty
-          }
         def xlArr(f: XlRun => Double) =
           xlRuns.map(r => fmt(f(r))).mkString("[", ",", "]")
         xlMetrics = Some(
@@ -1039,7 +915,7 @@ object Bench {
         // collide in the JSON (r10 spelled these osm_*_synth4000)
         Seq(s"osm_parse_xl$xlCopies" -> tParse,
           s"osm_import_xl$xlCopies" -> tImport,
-          s"osm_generalize_xl$xlCopies" -> tGen) ++ xlStored
+          s"osm_generalize_xl$xlCopies" -> tGen)
       } catch { case e: Throwable =>
         System.err.println(s"[bench] osm_import_synth_xl failed: ${e.getMessage}")
         Seq.empty
@@ -1211,7 +1087,7 @@ object Bench {
     // the headroom: the session's zstd io codec + rdd.compress (shuffle,
     // sort-spill, and cache-spill bytes ~2× smaller than lz4/uncompressed),
     // and running this LAST of the OSM phases with every prior section's
-    // scratch deleted first (diff/soak stores, bucketed warehouse tables).
+    // scratch deleted first (the diff/soak stores).
     // A usable-space guard skips the section honestly when the box cannot
     // hold it — a mid-import ENOSPC abort burns ~10 min and records
     // nothing — and logs the free-space arithmetic either way.
@@ -1225,7 +1101,7 @@ object Bench {
         val xxlCopies =
           sys.env.getOrElse("SPARK_GRAFT_PBF_COPIES_XXL", "9600").toInt
         // free the round's scratch before sizing the guard: the diff/soak
-        // stores and the XL bucketed tables hold 10+ GB this section needs
+        // stores hold 10+ GB this section needs
         for (d <- Seq(s"$workDir/bench-pbf-diff", s"$workDir/bench-diff-state",
             s"$workDir/bench-pbf-soak", s"$workDir/bench-soak-state",
             s"$workDir/bench-pbf-diff-xl", s"$workDir/bench-diff-xl-state")) {
@@ -1233,10 +1109,6 @@ object Bench {
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
             .delete(p, true)
         }
-        for (t <- Seq("graft_bench_wayrefs", "graft_bench_coords",
-            "graft_bench_xl_wayrefs", "graft_bench_xl_coords"))
-          try spark.sql(s"DROP TABLE IF EXISTS $t")
-          catch { case _: Throwable => () }
         val needGb =
           sys.env.getOrElse("SPARK_GRAFT_XXL_MIN_FREE_GB", "42").toDouble
         val freeGb = new java.io.File(workDir).getUsableSpace / gb
@@ -1442,7 +1314,7 @@ object Bench {
     val all = osmAcc ++ results
     val qs = all.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
-    val total = all.filterNot(_._1.endsWith("_net")).map(_._2).sum
+    val total = all.map(_._2).sum
     // full per-query record (archive/humans) — NOT the contract line
     println(s"""{"metric":"queries_detail","value":${fmt(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}""")
     // the LAST stdout line is the machine-readable record: short enough to

@@ -25,11 +25,6 @@ final class ImportPipeline(
     limit: Option[graft.operators.Limitto] = None,
     storage: org.apache.spark.storage.StorageLevel =
       ImportPipeline.defaultStorage,
-    // J1 strategy hook: (filtered ways, projected coords) => assembled
-    // frame. Default is the in-pipeline AQE shuffle join; the bench's
-    // bucketed A/B injects WayAssembly.resolveStored over a pre-bucketed
-    // element store (the reference's ID-sorted cache layout analog).
-    assembler: (DataFrame, DataFrame) => DataFrame = WayAssembly.resolve,
     // diff mode: localCheckpoint stages instead of caching them — see
     // tracked(). Off for batch imports: the checkpoint write is pure
     // overhead when each stage has a handful of consumers in one JVM pass.
@@ -81,13 +76,6 @@ final class ImportPipeline(
     * waves, so each wave materializes in parallel: small stage jobs fill
     * the cores the wave's big shuffle leaves idle. */
   def materializeStages(): Unit = {
-    // concurrent-within-wave is a win only when the cluster has idle
-    // capacity during the big shuffles; on a saturated local[N] box the
-    // jobs contend (measured +13% vs sequential) — keep it opt-out
-    if (sys.env.get("SPARK_GRAFT_WAVES").contains("0")) {
-      persisted.foreach(_._2.count())
-      return
-    }
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
@@ -212,7 +200,8 @@ final class ImportPipeline(
     // a distinct here would only add a shuffle over every way id
     val assembleIds = matchedWayIds.union(memberWayIds)
     val assembled = tracked(
-      assembler(bundle.ways.join(assembleIds, Seq("id"), "left_semi"), coords), wave = 1)
+      WayAssembly.resolve(bundle.ways.join(assembleIds, Seq("id"), "left_semi"), coords),
+      wave = 1)
 
     val wayIdCol = (if (single) -col("id") else col("id")).cast(LongType)
     // ONE join + ONE cache for both line and polygon flavors (two separate

@@ -20,7 +20,6 @@ import graft.streaming.{DiffPipeline, Replication, StateStore}
   *               [-limitto GEOJSON] [-limittocachebuffer DEG] [-optimize]
   *               [-overwritecache|-appendcache] [-diff]
   *               [-diff-state-before DUR] [-replication-interval DUR]
-  *               [-store PREFIX] [-store-reuse] [-store-buckets N]
   *               [-deployproduction] [-revertdeploy] [-removebackup]
   *   diff        -mapping M [-cachedir DIR] [-diffdir DIR] [-srid N]
   *               [-expiretiles-dir DIR] [-expiretiles-zoom Z]
@@ -106,7 +105,7 @@ object Main {
   private val boolFlags = Set("write", "optimize", "deployproduction",
     "revertdeploy", "removebackup", "once", "full", "deps",
     "overwritecache", "appendcache", "diff", "force", "commit-latest", "quiet",
-    "strict", "append", "compact", "store-reuse")
+    "strict", "append", "compact")
 
   /** config.json keys → flag names (config/config.go:14-35). Nested
     * `schemas` handled separately. */
@@ -264,42 +263,8 @@ object Main {
       var bundle = readBundle(spark, readPath, limit)
       if (startSeq > 0) // append: merge over the committed state
         bundle = mergeBundles(DiffPipeline.storedBundleAt(spark, cachedir, existingSeq), bundle)
-      // -store PREFIX: resolve J1 through a Spark-bucketed element store
-      // (`PREFIX_wayrefs` ⋈ `PREFIX_coords`, both bucketed+sorted by id —
-      // the reference's ID-sorted LevelDB layout, cache/delta.go:12-35).
-      // The bucketing shuffle is paid at store-write time; the assembly
-      // join itself then plans with ZERO exchanges, which the bench A/B
-      // measured as the faster read side (r8: 16.4 s from-store vs 20.2 s
-      // in-pipeline at synth400). -store-reuse skips the write and
-      // assembles straight off the existing tables — the repeated-read
-      // path a re-import over an unchanged cache amortizes the write
-      // against (same trust model as -appendcache: the caller asserts the
-      // store matches the bundle).
-      val assembler = a.str("store") match {
-        case None => graft.operators.WayAssembly.resolve _
-        case Some(prefix) =>
-          import org.apache.spark.sql.functions.{col, posexplode, size}
-          val reuse = a.bool("store-reuse")
-          val nBuckets = a.int("store-buckets", 32)
-          (ways: org.apache.spark.sql.DataFrame,
-           coords: org.apache.spark.sql.DataFrame) => {
-            if (!reuse) {
-              val exploded = ways.select(col("id").as("way_id"),
-                size(col("refs")).as("nrefs"),
-                posexplode(col("refs")).as(Seq("pos", "id")))
-              graft.operators.Bucketing.writeBucketed(
-                exploded, s"${prefix}_wayrefs", "id", nBuckets)
-              graft.operators.Bucketing.writeBucketed(
-                coords, s"${prefix}_coords", "id", nBuckets)
-            }
-            graft.operators.WayAssembly.resolveStored(
-              spark.table(s"${prefix}_wayrefs"),
-              spark.table(s"${prefix}_coords"))
-          }
-      }
       val tables = DiffPipeline.init(spark, mapping, cachedir, bundle,
-        a.long("srid", 3857).toInt, limit = limit, startSeq = startSeq,
-        assembler = assembler)
+        a.long("srid", 3857).toInt, limit = limit, startSeq = startSeq)
       // export to the connection root's import schema (K1 bulk load into
       // the blue/green layout; optionally K5-clustered)
       a.str("connection").foreach { conn =>

@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * the seconds go" is answerable without the UI (guide §1.1/§7.1).
   *
   * Usage: runMain graft.QueryProfile <sfDir> <name> [reps]
-  * Prints one line per completed stage: wall, executor run/CPU time,
-  * input bytes, shuffle read/write bytes, task count — sorted by run time.
+  * Prints one line per completed stage attempt: wall, executor run/CPU
+  * time, input bytes, shuffle read/write bytes, task count — sorted by run
+  * time.
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
@@ -54,14 +55,14 @@ object QueryProfile {
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(300) // let the last stage-completed events drain
+      org.apache.spark.sql.graft.ListenerDrain(spark.sparkContext)
       System.err.println(f"== $name rep $rep: $dt%.2f s, " +
         s"${stages.size} stages ==")
       import scala.jdk.CollectionConverters._
       val sorted = stages.asScala.toSeq.sortBy(-_.runMs)
       for (s <- sorted.take(25))
         System.err.println(
-          f"  stage ${s.id}%4d wall=${s.wallMs / 1e3}%6.2fs " +
+          f"  stage ${s.id}%4d attempt=${s.attempt} wall=${s.wallMs / 1e3}%6.2fs " +
             f"run=${s.runMs / 1e3}%7.2fs cpu=${s.cpuMs / 1e3}%7.2fs " +
             f"in=${s.inMb}%7.1fMB sr=${s.srMb}%7.1fMB sw=${s.swMb}%7.1fMB " +
             f"tasks=${s.tasks}%3d ${s.nm}")

@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * struct per group and re-sorted it (measured ~2× slower at 10⁷ refs).
   *
   * At planet scale: coords is billions of rows — both sides shuffle-hash
-  * on the ref id; pre-bucketing coords and the exploded refs by id makes
-  * this co-located. Locally AQE handles it.
+  * on the ref id. Locally AQE handles it.
   */
 object WayAssembly {
 
@@ -33,6 +32,8 @@ object WayAssembly {
     *         refs). refs ride along so ring assembly never re-joins `ways`.
     */
   def resolve(ways: DataFrame, coords: DataFrame): DataFrame = {
+    val spark = ways.sparkSession
+    import spark.implicits._
     val exploded = ways
       .select(col("id").as("way_id"), size(col("refs")).as("nrefs"),
         posexplode(col("refs")).as(Seq("pos", "ref")))
@@ -41,31 +42,8 @@ object WayAssembly {
     // the decision at planet scale where the build side no longer fits)
     val joined = exploded.join(coords, exploded("ref") === coords("id"))
       .select(col("way_id"), col("nrefs"), col("pos"), col("ref"), col("x"), col("y"))
-    regroup(joined)
-  }
-
-  /** Assembly over a pre-bucketed element store: `refs` is the exploded
-    * (way_id, nrefs, pos, id) table and `coords` the (id, x, y) table,
-    * both written bucketed+sorted by `id` (operators.Bucketing) — the
-    * batch analog of the reference's ID-sorted LevelDB cache
-    * (cache/delta.go:12-35). The ref→coordinate lookup then joins with
-    * ZERO exchanges (BucketingSpec pins it); only the way-sized regroup
-    * still shuffles. The layout pays its shuffle once at store-write time,
-    * so it wins when the store is read more than once (diff reruns,
-    * repeated imports); the `osm_import_bucketed` bench entry A/Bs it
-    * against the in-pipeline AQE shuffle join.
-    */
-  def resolveStored(refs: DataFrame, coords: DataFrame): DataFrame =
-    regroup(refs.join(coords, Seq("id"))
-      .select(col("way_id"), col("nrefs"), col("pos"), col("id").as("ref"),
-        col("x"), col("y")))
-
-  /** Shared regroup: shuffle the joined (way_id, nrefs, pos, ref, x, y)
-    * rows to their way, sort by (way, pos), stream runs into primitive
-    * arrays. */
-  private def regroup(joined: DataFrame): DataFrame = {
-    val spark = joined.sparkSession
-    import spark.implicits._
+    // regroup: shuffle the joined rows to their way, sort by (way, pos),
+    // stream runs into primitive arrays
     joined
       .repartition(col("way_id"))
       .sortWithinPartitions("way_id", "pos")

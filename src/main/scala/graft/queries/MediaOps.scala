@@ -335,7 +335,7 @@ object MediaOps {
   // from two modality tables sharing an id — text metadata from
   // `documents`, vector stats from `embeddings`. One hash join on the id;
   // at fleet scale both modality tables are bucketed by that id
-  // (operators/Bucketing) and the assembly plans with zero exchanges. The
+  // (DataFrameWriter.bucketBy) and the assembly plans with zero exchanges. The
   // vector side carries size + rounded L2 norm through the codegen'd
   // VecNorm expression, so the gate also value-checks the native
   // expression on the full embeddings table.

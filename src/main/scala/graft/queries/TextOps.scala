@@ -2020,8 +2020,8 @@ object TextOps {
   // snapshots here are deterministic derivations of the one test corpus
   // (v1 drops doc_id≡6 mod 7, v2 drops ≡4 mod 5 and rewrites ≡0 mod 3) so
   // every status class is populated. At fleet scale both releases are
-  // bucketed by doc_id (operators/Bucketing) and the join plans with zero
-  // exchanges; only (id, 16-byte fp) pairs move, never the payloads.
+  // bucketed by doc_id (DataFrameWriter.bucketBy) and the join plans with
+  // zero exchanges; only (id, 16-byte fp) pairs move, never the payloads.
   private def snapshotDiff(s: SparkSession, dir: String): DataFrame = {
     val v1 = docs(s, dir).filter(expr("doc_id % 7 != 6"))
       .select(col("doc_id").as("id1"), md5(col("text")).as("fp1"))

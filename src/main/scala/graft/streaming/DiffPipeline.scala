@@ -70,9 +70,7 @@ object DiffPipeline {
   def init(spark: SparkSession, mapping: CompiledMapping, stateDir: String,
       bundle: Bundle, srid: Int = 3857, nBuckets: Int = 1024,
       limit: Option[graft.operators.Limitto] = None,
-      startSeq: Long = 0,
-      assembler: (DataFrame, DataFrame) => DataFrame =
-        graft.operators.WayAssembly.resolve): Map[String, DataFrame] = {
+      startSeq: Long = 0): Map[String, DataFrame] = {
     val store = new StateStore(spark, stateDir)
     store.setHashBuckets(nBuckets)
     val timing = sys.env.get("SPARK_GRAFT_DIFF_TIMING").contains("1")
@@ -107,8 +105,7 @@ object DiffPipeline {
             col("rel_id")), "id")))
     mark("element-writes")
     val stored = storedBundle(store, startSeq)
-    val pipeline = new ImportPipeline(spark, mapping, srid, limit,
-      assembler = assembler)
+    val pipeline = new ImportPipeline(spark, mapping, srid, limit)
     val tables = pipeline.run(stored)
     val gens = Generalize(spark, mapping, tables)
     // force the shared stage caches once, then drain the ~30 output-table

@@ -4,8 +4,8 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, shiftright, xxhash64}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
+import org.apache.spark.sql.types.{DataType, LongType, StructField, StructType}
 
 /** Versioned parquet state for incremental maintenance (SURVEY.md §2 ST3/ST4).
   *
@@ -27,6 +27,12 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    store can't; copy-on-write bucket rewrites were measured to amplify
   *    a spread-out 10³-element batch into a near-full store rewrite.
   *
+  * This is the one on-disk format the store reads: hash buckets
+  * (`buckets.txt`) and ordinal-stamped `SEGO` segments. A store from the
+  * retired id-range scheme (`bucketbits.txt`) or with unstamped `SEG`
+  * segments fails its first table read with an IllegalStateException
+  * naming the store, the table and the file.
+  *
   * A batch writes all tables at `seq+1`, then atomically commits by
   * rewriting `state.txt` — the analog of the reference's `last.state.txt`
   * (update/cmd.go:369-384). A crash before commit leaves half-written
@@ -43,15 +49,13 @@ final class StateStore(spark: SparkSession, dir: String) {
   // diff apply's tail (measured 5.7 s/batch), while driver-side listing
   // of the same dirs is sub-millisecond each. Keep discovery on the
   // driver for the store's views; a real cluster against object storage
-  // wants the opposite, so the knob stays overridable (session conf
-  // `graft.store.listThreshold` wins, then the env var). The setting is
+  // wants the opposite, so the knob stays overridable through the session
+  // conf `graft.store.listThreshold`. The setting is
   // SCOPED to the store's own reads — set before each file-index build
   // and restored after (r9 advice: the old constructor-global set leaked
   // driver-side listing into every later read in the session).
   private val listThreshold: String =
-    spark.conf.getOption("graft.store.listThreshold")
-      .orElse(sys.env.get("SPARK_GRAFT_LIST_THRESHOLD"))
-      .getOrElse("65536")
+    spark.conf.getOption("graft.store.listThreshold").getOrElse("65536")
 
   /** Run `f` (a `spark.read.parquet` call — parquet resolves its file
     * index eagerly at DataFrame creation) with the store's discovery
@@ -65,7 +69,7 @@ final class StateStore(spark: SparkSession, dir: String) {
     * interleaved scopes on two sessions (spark.newSession()) restore
     * session A's saved threshold into session B and leak the override
     * into A permanently. All stores of a session resolve the same
-    * threshold (env/conf), so nesting different values is not a case. */
+    * threshold (session conf), so nesting different values is not a case. */
   private def withListScope[T](f: => T): T = {
     val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
     StateStore.scopeLock.synchronized {
@@ -93,8 +97,10 @@ final class StateStore(spark: SparkSession, dir: String) {
 
   private def statePath = new Path(root, "state.txt")
   private def tmpPath = new Path(root, ".state.txt.tmp")
-  private def bitsPath = new Path(root, "bucketbits.txt")
   private def bucketsPath = new Path(root, "buckets.txt")
+  // written by the retired id-range bucket scheme; its presence marks a
+  // store whose buckets this reader would mis-address (see readManifest)
+  private lazy val rangeBucketed = fs.exists(new Path(root, "bucketbits.txt"))
 
   // ---- small control files --------------------------------------------------
 
@@ -129,22 +135,13 @@ final class StateStore(spark: SparkSession, dir: String) {
     * still maps to ≤ min(|ids|, n) buckets. */
   def setHashBuckets(n: Int): Unit = writeSmall(bucketsPath, s"hash:$n")
 
-  /** Legacy id-range scheme (id >> bits); kept so existing stores read. */
-  def setBucketBits(bits: Int): Unit = writeSmall(bitsPath, bits.toString)
-
-  // Left(bits) = legacy range shift, Right(n) = hash buckets
-  private lazy val scheme: Either[Int, Int] =
+  /** The store's hash bucket count (1024 when none was set). */
+  private lazy val scheme: Int =
     if (fs.exists(bucketsPath))
-      Right(readSmall(bucketsPath).trim.stripPrefix("hash:").toInt)
-    else if (fs.exists(bitsPath)) Left(readSmall(bitsPath).trim.toInt)
-    else Right(1024)
+      readSmall(bucketsPath).trim.stripPrefix("hash:").toInt
+    else 1024
 
-  def bucketOf(idCol: Column): Column = scheme match {
-    // arithmetic shift, not division: exact for the negative mangled
-    // way/relation ids (RelIDOffset ≈ -1e17 is far outside double precision)
-    case Left(bits) => shiftright(idCol, bits)
-    case Right(n) => pmod(xxhash64(idCol), lit(n.toLong))
-  }
+  def bucketOf(idCol: Column): Column = pmod(xxhash64(idCol), lit(scheme.toLong))
 
   /** Distinct buckets of an id frame (driver-side control plane: diff id
     * sets are ~10⁴ rows). */
@@ -280,8 +277,7 @@ final class StateStore(spark: SparkSession, dir: String) {
     * to maxSegments segments per table, and every closure/rebuild read of
     * every table paid N file indexes + an N-way union per view — measured
     * as the per-batch wall growing 4.1 s → 12.4 s (closure) across one
-    * 8-batch compaction cycle of the soak. Legacy unstamped segments
-    * (pre-r13 stores) keep the per-segment path. */
+    * 8-batch compaction cycle of the soak. */
   private def mergedView(name: String, seq: Long, only: Option[Set[Long]]): DataFrame = {
     val m = readManifest(name, seq)
     val base = new Path(root, name)
@@ -303,33 +299,13 @@ final class StateStore(spark: SparkSession, dir: String) {
       case Some(bs) => df.filter(bucketOf(col(idCol)).isInCollection(bs))
       case None => df
     }
-    val ordered = m.segments.zipWithIndex
-    val (stamped, legacy) = ordered.partition(_._1.stamped)
-    // stamped segments: one scan carrying its own __ord column
-    val stampedScan =
-      if (stamped.isEmpty) Nil
-      else Seq(pruned(rd(
-        StructType(m.schema.fields :+
-          org.apache.spark.sql.types.StructField("__ord",
-            org.apache.spark.sql.types.LongType)),
-        stamped.map(_._1.ins))))
-    val legacyScans = legacy.map { case (s, i) =>
-      pruned(rd(m.schema, Seq(s.ins)).withColumn("__ord", lit(i + 1L)))
-    }
-    val withOrd = ((baseDf.withColumn("__ord", lit(0L)) +: legacyScans) ++
-      stampedScan).reduce(_ unionByName _)
-    val tombSchema = StructType(Seq(m.schema(tombCol)))
-    val tombStamped =
-      if (stamped.isEmpty) Nil
-      else Seq(rd(
-        StructType(tombSchema.fields :+
-          org.apache.spark.sql.types.StructField("__tord",
-            org.apache.spark.sql.types.LongType)),
-        stamped.map(_._1.del)))
-    val tombLegacy = legacy.map { case (s, i) =>
-      rd(tombSchema, Seq(s.del)).withColumn("__tord", lit(i + 1L))
-    }
-    val tombs = (tombLegacy ++ tombStamped).reduce(_ unionByName _)
+    // every segment's files carry their own fold ordinal, so all of a
+    // table's segments read as one scan
+    val segScan = pruned(rd(StructType(m.schema.fields :+
+      StructField("__ord", LongType)), m.segments.map(_.ins)))
+    val withOrd = baseDf.withColumn("__ord", lit(0L)).unionByName(segScan)
+    val tombs = rd(StructType(Seq(m.schema(tombCol), StructField("__tord", LongType))),
+        m.segments.map(_.del))
       .withColumnRenamed(tombCol, "__tid")
     withOrd.join(broadcast(tombs),
         withOrd(tombCol) === tombs("__tid") && tombs("__tord") > withOrd("__ord"),
@@ -340,43 +316,53 @@ final class StateStore(spark: SparkSession, dir: String) {
   private def manifestPath(name: String, seq: Long): Path =
     new Path(new Path(tablePath(name, seq)), "_manifest")
 
-  // `stamped`: the segment's ins/del files physically carry their fold
-  // ordinal (`__ord`/`__tord` columns, written by writeDelta since r13) so
-  // ALL stamped segments of a table read as ONE parquet scan. Legacy
-  // segments (no columns) still read one-scan-per-segment.
+  // A segment's ins/del files physically carry their fold ordinal
+  // (`__ord`/`__tord` columns, written by writeDelta) so ALL segments of a
+  // table read as ONE parquet scan.
   private final case class Segment(idCol: String, tombCol: String,
-      ins: String, del: String, stamped: Boolean = false)
+      ins: String, del: String)
   private final case class Manifest(schema: StructType,
       buckets: Map[Long, String], segments: Seq[Segment])
 
   /** `_manifest`: line 1 = schema JSON; then `<bucket>\t<relative dir>`
     * base-map lines; then ordered
-    * `SEG\t<idCol>\t<tombCol>\t<insDir>\t<delDir>` (legacy) or
-    * `SEGO\t…` (ordinal-stamped files, r13) lines — merge-on-read delta
-    * segments, oldest first. */
+    * `SEGO\t<idCol>\t<tombCol>\t<insDir>\t<delDir>` lines — the
+    * ordinal-stamped merge-on-read delta segments, oldest first. */
   private def writeManifest(name: String, seq: Long, schema: StructType,
       buckets: Map[Long, String], segments: Seq[Segment] = Nil): Unit = {
     val body = schema.json +:
       (buckets.toSeq.sortBy(_._1).map { case (b, p) => s"$b\t$p" } ++
-        segments.map(s => s"${if (s.stamped) "SEGO" else "SEG"}\t" +
-          s"${s.idCol}\t${s.tombCol}\t${s.ins}\t${s.del}"))
+        segments.map(s => s"SEGO\t${s.idCol}\t${s.tombCol}\t${s.ins}\t${s.del}"))
     val vdir = new Path(tablePath(name, seq))
     if (!fs.exists(vdir)) fs.mkdirs(vdir)
     writeSmall(manifestPath(name, seq), body.mkString("\n"))
   }
 
+  /** Parse a table's manifest. A store this reader cannot fold — the
+    * retired id-range bucket scheme, or a line tag other than a bucket
+    * number or `SEGO` (e.g. a pre-ordinal `SEG` segment) — fails with the
+    * store dir, the table and the offending file. */
   private def readManifest(name: String, seq: Long): Manifest = {
-    val lines = readSmall(manifestPath(name, seq)).split("\n").toSeq
+    val path = manifestPath(name, seq)
+    def unreadable(file: Path, why: String): Nothing =
+      throw new IllegalStateException(
+        s"state store $dir, table $name: $why ($file)")
+    if (rangeBucketed) unreadable(new Path(root, "bucketbits.txt"),
+      "id-range bucket scheme is no longer readable; re-import the store")
+    val lines = readSmall(path).split("\n").toSeq
     val schema = DataType.fromJson(lines.head).asInstanceOf[StructType]
     val (segLines, bucketLines) = lines.tail.filter(_.nonEmpty)
-      .partition(l => l.startsWith("SEG\t") || l.startsWith("SEGO\t"))
+      .partition(_.startsWith("SEGO\t"))
     val buckets = bucketLines.map { l =>
-      val Array(b, p) = l.split("\t", 2)
-      b.toLong -> p
+      l.split("\t", 2) match {
+        case Array(b, p) if b.toLongOption.isDefined => b.toLong -> p
+        case _ => unreadable(path,
+          s"unknown manifest line tag '${l.takeWhile(_ != '\t')}'")
+      }
     }.toMap
     val segments = segLines.map { l =>
-      val Array(tag, idCol, tombCol, ins, del) = l.split("\t", 5)
-      Segment(idCol, tombCol, ins, del, stamped = tag == "SEGO")
+      val Array(_, idCol, tombCol, ins, del) = l.split("\t", 5)
+      Segment(idCol, tombCol, ins, del)
     }
     Manifest(schema, buckets, segments)
   }
@@ -453,7 +439,7 @@ final class StateStore(spark: SparkSession, dir: String) {
       val vdir = tablePath(name, seq)
       // stamp the fold ordinal into the files (position in the manifest's
       // segment list, 1-based — stable: segments only append until a
-      // compaction clears the list) so every later read folds ALL stamped
+      // compaction clears the list) so every later read folds ALL
       // segments in one scan (see mergedView). lit() columns cost nothing
       // in the write and make the read O(1) scans instead of O(segments).
       val ord = m.segments.size + 1L
@@ -464,8 +450,7 @@ final class StateStore(spark: SparkSession, dir: String) {
       deleteIds.select(col(tc)).withColumn("__tord", lit(ord))
         .write.mode("overwrite").parquet(s"$vdir/del")
       writeManifest(name, seq, m.schema, m.buckets,
-        m.segments :+ Segment(idCol, tc, s"v$seq/ins", s"v$seq/del",
-          stamped = true))
+        m.segments :+ Segment(idCol, tc, s"v$seq/ins", s"v$seq/del"))
     }
   }
 

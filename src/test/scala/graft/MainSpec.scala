@@ -223,39 +223,6 @@ class MainSpec extends SparkSpecBase {
       s"header replication timestamp expected, got ${st.get.timestamp}")
   }
 
-  test("import -store assembles via the bucketed element store; -store-reuse reads it back") {
-    val monaco = "/root/reference/vendor/github.com/omniscale/go-osm/parser/pbf/monaco-20150428.osm.pbf"
-    assume(new java.io.File(monaco).exists())
-    val mapping = "/root/reference/test/complete_db_mapping.json"
-    def imp(extra: String*): org.apache.spark.sql.DataFrame = {
-      val state = Files.createTempDirectory("graft-store-state").toString
-      val conn = Files.createTempDirectory("graft-store-conn").toString
-      Main.run(Array("import", "-mapping", mapping, "-read", monaco,
-        "-write", "-cachedir", state, "-connection", conn) ++ extra)
-      spark.read.parquet(s"$conn/import/roads")
-    }
-    def key(df: org.apache.spark.sql.DataFrame) =
-      df.select("osm_id", "geometry")
-    val direct = imp()
-    // first -store import writes PREFIX_wayrefs/PREFIX_coords and resolves
-    // J1 from them — identical output to the in-pipeline join
-    val stored = imp("-store", "graft_test_store")
-    assert(stored.count() == direct.count())
-    assert(key(direct).except(key(stored)).isEmpty &&
-      key(stored).except(key(direct)).isEmpty,
-      "store-resolved assembly must match the in-pipeline join")
-    // the stored lookup join itself is exchange-free (paid at write time)
-    assert(graft.operators.Bucketing.shuffleFree(
-      spark.table("graft_test_store_wayrefs")
-        .join(spark.table("graft_test_store_coords"), Seq("id"))),
-      "bucketed store join must plan with zero exchanges")
-    // -store-reuse: the repeated-read path — no rewrite, same tables
-    val reused = imp("-store", "graft_test_store", "-store-reuse")
-    assert(key(reused).except(key(direct)).isEmpty &&
-      key(direct).except(key(reused)).isEmpty,
-      "reused store must reproduce the import")
-  }
-
   test("import refuses an existing cache; -overwritecache and -appendcache proceed") {
     val mappingFile = writeMapping()
     val state = Files.createTempDirectory("graft-guard-state").toString

@@ -9,12 +9,16 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpecBase.session
   val sf001 = "/root/testdata/sf0.001"
   val sf01  = "/root/testdata/sf0.01"
+
+  /** True when the physical plan of `df` contains no shuffle exchange. */
+  def shuffleFree(df: org.apache.spark.sql.DataFrame): Boolean =
+    !df.queryExecution.executedPlan.toString.contains("Exchange hashpartitioning")
 }
 
 object SparkSpecBase {
   lazy val session: SparkSession = {
-    // Per-run warehouse: managed-table CTAS (BucketingSpec) must not trip
-    // over locations left on disk by a previous JVM's run.
+    // Per-run warehouse: a managed table never lands in the working
+    // directory or trips over locations a previous JVM's run left on disk.
     val warehouse =
       java.nio.file.Files.createTempDirectory("graft-warehouse-").toUri.toString
     val s = SparkSession.builder()

@@ -7,7 +7,7 @@ import graft.mapping.{CompiledMapping, MappingConf}
 import graft.sources.OsmXml
 
 /** Diff maintenance must be bucket-pruned: a small diff rewrites only the
-  * id-range buckets its closure touches, carrying every other bucket
+  * hash buckets its closure touches, carrying every other bucket
   * forward by manifest pointer (StateStore bucketed layout). The goldens in
   * DiffPipelineSpec prove content correctness through the same code path;
   * this spec proves the PRUNING — v1 holds strictly fewer bucket dirs than
@@ -31,7 +31,7 @@ class BucketPruneSpec extends SparkSpecBase {
     }
   }
 
-  private def testStoreFold(): Unit = {
+  test("the segment fold is newest-wins, one scan, and compacts after maxSegments") {
     import spark.implicits._
     val dir = Files.createTempDirectory("graft-store-fold").toString
     val store = new StateStore(spark, dir)
@@ -51,7 +51,9 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(rows(3) == Seq((1L, "A"), (2L, "B"), (3L, "c"), (4L, "d")))
     val m3 = new String(Files.readAllBytes(
       Paths.get(dir, "t", "v3", "_manifest")), "UTF-8")
-    assert(!m3.contains("SEG\t"), "compaction must fold segments into a base")
+    val segs3 = m3.linesIterator.count(_.startsWith("SEGO\t"))
+    assert(segs3 == 0,
+      s"compaction must fold segments into a base ($segs3 segments in v3)")
     assert(m3.contains("v3/__b="), "compaction must write a fresh base")
     // delete-only batch (no inserts)
     ins(4, Seq.empty, Seq(3L))
@@ -67,18 +69,18 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(plan.contains("BroadcastHashJoin") &&
       !plan.contains("BroadcastNestedLoopJoin"),
       s"segment fold must be a broadcast hash anti-join:\n$plan")
-    // r13 single-scan fold: however many stamped segments accumulate, the
+    // single-scan fold: however many segments accumulate, the
     // insert side of the fold is ONE parquet scan (the files carry their
     // own __ord), not one scan per segment — the per-batch read cost of a
     // long diff stream must not grow with the segment count. v2 holds TWO
     // segments; the plan has base + all-ins + the del scan (duplicated
     // once by the optimizer splitting the anti-join over the union) = 4
-    // scans, a CONSTANT in the segment count (legacy folds planned
-    // 2 + 2·segments).
+    // scans, a CONSTANT in the segment count (a per-segment fold would
+    // plan 2 + 2·segments).
     val plan2 = store.read("t", 2).queryExecution.executedPlan.toString
     val scans = "Scan parquet".r.findAllIn(plan2).size
     assert(scans <= 4,
-      s"stamped segments must fold as one scan (got $scans, expected ≤4 " +
+      s"segments must fold as one scan (got $scans, expected ≤4 " +
         s"independent of segment count):\n$plan2")
     // a no-op version step carries the table forward without a new
     // segment: same rows, no v5 segment dirs, no extra fold level
@@ -128,10 +130,6 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(coords.select("id").distinct().count() == coords.count(),
       "bucket merge must not duplicate ids")
 
-    // segment fold correctness, the newest-wins contract, and compaction
-    // — directly against the store
-    testStoreFold()
-
     // the maintained reverse indexes must stay consistent with the
     // element tables they index after a diff (the closure's correctness
     // rests on this invariant, not just on output goldens)
@@ -162,6 +160,36 @@ class BucketPruneSpec extends SparkSpecBase {
     assert(Files.isDirectory(Paths.get(stateDir, "coords", "v0")),
       "vacuum deleted a version dir still referenced by the live manifest")
     assert(store.read("coords", 1).count() == coords.count())
+  }
+
+  test("a store the reader cannot fold fails loudly, naming store, table and file") {
+    import spark.implicits._
+    def oneTableStore(): String = {
+      val dir = Files.createTempDirectory("graft-store-unreadable").toString
+      val store = new StateStore(spark, dir)
+      store.setHashBuckets(4)
+      store.writeBucketed("t", 0, Seq((1L, "a")).toDF("id", "v"), "id")
+      dir
+    }
+    def failure(dir: String): String =
+      intercept[IllegalStateException](new StateStore(spark, dir).read("t", 0))
+        .getMessage
+    // an unstamped pre-ordinal segment line: neither a bucket nor SEGO
+    val segDir = oneTableStore()
+    val manifest = Paths.get(segDir, "t", "v0", "_manifest")
+    Files.write(manifest, (new String(Files.readAllBytes(manifest), "UTF-8") +
+      "\nSEG\tid\tid\tv1/ins\tv1/del").getBytes("UTF-8"))
+    // hand-edited: drop the local filesystem's stale checksum sidecar
+    Files.delete(manifest.resolveSibling("._manifest.crc"))
+    val segMsg = failure(segDir)
+    assert(segMsg.contains(segDir) && segMsg.contains("table t") &&
+      segMsg.contains(manifest.toString) && segMsg.contains("'SEG'"), segMsg)
+    // a leftover marker of the retired id-range bucket scheme
+    val bitsDir = oneTableStore()
+    Files.write(Paths.get(bitsDir, "bucketbits.txt"), "20".getBytes("UTF-8"))
+    val bitsMsg = failure(bitsDir)
+    assert(bitsMsg.contains(bitsDir) && bitsMsg.contains("table t") &&
+      bitsMsg.contains(Paths.get(bitsDir, "bucketbits.txt").toString), bitsMsg)
   }
 
   test("diff init+apply is identical under distributed file discovery") {

@@ -82,7 +82,7 @@ class StreamingDedupSpec extends SparkSpecBase {
     val cand = StreamingDedup.stateCandidates(st, nb)
     val plan = cand.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), s"not a broadcast join:\n$plan")
-    assert(graft.operators.Bucketing.shuffleFree(cand),
+    assert(shuffleFree(cand),
       s"state side shuffles:\n$plan")
     assert(cand.select("old_id", "new_id").collect().map(r =>
       (r.getLong(0), r.getLong(1))).toSet == Set((1L, 10L)))
